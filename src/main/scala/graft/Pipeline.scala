@@ -37,7 +37,6 @@ object Pipeline {
   def triples(spark: SparkSession, docs: Dataset[Doc],
       gazetteer: Seq[GazEntry] = Spec.Gazetteer,
       sameAs: Seq[SameAsEdge] = Spec.SameAs,
-      observeMetrics: Boolean = false,
       atScale: Boolean = false): DataFrame = {
     import spark.implicits._
 
@@ -67,7 +66,7 @@ object Pipeline {
         (remapped, entUriDim(spark, gazetteer, canonMap))
       }
 
-    assemble(spark, exploded, canon, entUris, atScale, observeMetrics)
+    assemble(spark, exploded, canon, entUris, atScale)
   }
 
   /** Canonical entity-URI dimension minted from the GAZETTEER vocabulary,
@@ -109,8 +108,7 @@ object Pipeline {
     * a cross-batch entity vocabulary is open-world by construction. */
   def triplesWithComponents(spark: SparkSession, docs: Dataset[Doc],
       components: DataFrame,
-      gazetteer: Seq[GazEntry] = Spec.Gazetteer,
-      observeMetrics: Boolean = false): DataFrame = {
+      gazetteer: Seq[GazEntry] = Spec.Gazetteer): DataFrame = {
     val exploded = SpanOps.wellFormed(SpanOps.explodeSpans(docs))
     val cands = GazetteerMatcher.candidates(spark,
       SpanOps.textSpans(exploded), gazetteer)
@@ -118,13 +116,13 @@ object Pipeline {
       components)
     assemble(spark, exploded, canon,
       entUriDimFromComponents(spark, gazetteer, components),
-      atScale = true, observeMetrics)
+      atScale = true)
   }
 
   /** Shared tail of both entry points: dedup → triple assembly → union. */
   private def assemble(spark: SparkSession, exploded: DataFrame,
-      canon: DataFrame, entUriDim: DataFrame, atScale: Boolean,
-      observeMetrics: Boolean): DataFrame = {
+      canon: DataFrame, entUriDim: DataFrame,
+      atScale: Boolean): DataFrame = {
     import spark.implicits._
 
     // M7 predicate mapping: literal-map expression on the fast path,
@@ -179,15 +177,6 @@ object Pipeline {
     // disjoint, so the union IS the deduped (subj, pred, obj) set — no
     // final corpus-wide dropDuplicates shuffle needed (exact set
     // semantics, BASELINE.json:2).
-    val deduped = mentionTriples.unionByName(labelTriples)
-      .unionByName(mediaTriples)
-    // observe() is opt-in: a CollectMetrics node upstream of further plan
-    // composition (exceptAll, streaming foreachBatch) mis-binds attributes
-    // in GenerateExec on Spark 4.1 — enable it only when the returned df
-    // is consumed directly (e.g. straight into an action or write).
-    // Row-count lineage is independently recorded by the sink manifest.
-    if (observeMetrics)
-      deduped.observe("graft_triples", count(lit(1)).as("triples_out"))
-    else deduped
+    mentionTriples.unionByName(labelTriples).unionByName(mediaTriples)
   }
 }

@@ -78,7 +78,8 @@ object DocStream {
     *      intersection.
     * Per-batch cost is one shuffle-free columnar scan of history (3
     * columns, bucket-pruned) instead of a full-history shuffle —
-    * benchmarked ~flat as history grows ([[graft.BenchStream]]). An
+    * measured per batch by kgbench's `kg_stream` workload
+    * (`DocStream.dedup_s` in its traced run). An
     * Iceberg deployment would express the same thing as MERGE INTO on the
     * bucketed table; `broadcastDedup = false` restores the shuffle
     * anti-join for deployments with unbounded micro-batches. */
@@ -118,8 +119,8 @@ object DocStream {
     * batch's key set → broadcast left-anti of the batch against the
     * surviving intersection. `triples` should be cached by the caller (it
     * feeds the bucket-set agg, the broadcast key build, and the returned
-    * plan). Package-visible so [[graft.BenchStream]] audits and times the
-    * REAL plan rather than a replica. */
+    * plan). Package-visible so kgbench's `kg_stream` trace times the REAL
+    * plan (`DocStream.dedup_s`) rather than a replica. */
   private[graft] def dedupAgainstPrior(s: SparkSession, triples: DataFrame,
       outPath: String, prior: Seq[String],
       broadcastDedup: Boolean = true): DataFrame =

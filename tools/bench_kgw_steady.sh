@@ -1,17 +1,19 @@
 #!/usr/bin/env bash
-# FROZEN two-cluster-size scaling protocol, gate v2 (BENCH/BASELINE.md
-# §scaling): paired steady-state kg_write. Each invocation of
-# graft.BenchKgw is one sample: synthesize (untimed) + full-size in-JVM
-# warm (untimed) + ONE timed e2e pipeline+bucketed-write. Samples
-# alternate LO/HI cores; medians of accepted samples per size.
+# FROZEN two-cluster-size scaling protocol, gate v3 (BENCH/BASELINE.md
+# §scaling): paired steady-state kg_write. Each `graft.Layers kg_write`
+# invocation is one sample: synthesize (untimed) + full-size in-JVM warm
+# (untimed) + ONE timed e2e pipeline+bucketed-write. Samples alternate
+# LO/HI cores and APPEND to BENCH/raw_steady_cpus{LO,HI}.jsonl (remove
+# those files first for a fresh set); medians of accepted samples per size
+# come from tools/scaling_steady.py.
 #
 # Do NOT run anything CPU-heavy (including a second sbt) while this runs.
 #
-# GATE v2 (round-5, PRE-REGISTERED before the accepting run; evidence in
-# BENCH/ANALYSIS.md): guest loadavg cannot see host-side contention — in
-# the 2026-08-17 16:10 window every sample passed loadavg<2.0 yet ran
-# 30–45% slow, while /proc/stat steal hit 45–97% of non-idle time. So:
-#  (a) loadavg gate (v1) — rejects in-guest load;
+# GATES (pre-registered; evidence in BENCH/ANALYSIS.md): guest loadavg
+# cannot see host-side contention — in the 2026-08-17 16:10 window every
+# sample passed loadavg<2.0 yet ran 30–45% slow, while /proc/stat steal
+# hit 45–97% of non-idle time. So:
+#  (a) loadavg gate — rejects in-guest load;
 #  (b) canary gate: 16-process 3 s sha256 busy burst (tools/host_canary.py)
 #      must see steal% < CANARY_MAX_STEAL while busy AND aggregate hash
 #      throughput >= CANARY_MIN_MHASH (calibrated 2026-08-17T17:12Z clean
@@ -19,15 +21,23 @@
 #      floor 0.95 ≈ 86% of the clean median also catches frequency/
 #      priority throttling that steal accounting misses) — rejects
 #      host-side thieving that only manifests under load;
-#  (c) post-hoc pre-registered rule: each sample's OWN JSON line carries
-#      steal_pct measured by BenchKgw across its timed window; samples
-#      with steal_pct >= 5.0 are excluded by tools/scaling_steady.py
-#      (excluded counts printed; a pair with a rejected member drops from
-#      the per-pair estimator).
+#  (c) post-hoc rule: each sample's OWN JSON line carries steal_pct
+#      measured across its timed window; samples with steal_pct >= 5.0 are
+#      excluded by tools/scaling_steady.py (excluded counts printed; a
+#      pair with a rejected member drops from the per-pair estimator);
+#  (d) CLOSING canary bracket (added 2026-08-18 after a sample read 39%
+#      slow with steal_pct 1.31 and a clean opening canary, i.e.
+#      contention striking MID-sample): immediately after each sample the
+#      same canary runs again and its mhash/steal are merged into the
+#      sample's JSON line (canary_after_mhash, canary_after_steal).
+#      scaling_steady.py rejects samples whose closing canary reads
+#      mhash < 0.95 OR steal >= 3 — the opening gate's thresholds, so a
+#      sample is accepted only if the box could deliver full throughput at
+#      BOTH ends of its window. Rule (d) can only reject samples.
 set -euo pipefail
 cd "$(dirname "$0")/.."
-PAIRS="${PAIRS:-5}"
-LO="${LO:-4}"; HI="${HI:-16}"
+PAIRS="${PAIRS:-3}"
+LO="${LO:-1}"; HI="${HI:-4}"
 DOCS="${SPARK_GRAFT_BENCH_DOCS:-1000000}"
 GATE_LOAD="${GATE_LOAD:-2.0}"
 GATE_TIMEOUT_S="${GATE_TIMEOUT_S:-3600}"
@@ -36,9 +46,7 @@ CANARY_S="${CANARY_S:-3}"
 CANARY_MAX_STEAL="${CANARY_MAX_STEAL:-3.0}"
 CANARY_MIN_MHASH="${CANARY_MIN_MHASH:-0.95}"
 mkdir -p BENCH
-echo "$(date -u +%FT%TZ) loadavg=$(cut -d' ' -f1-3 /proc/loadavg) steady-v2 pairs=$PAIRS lo=$LO hi=$HI docs=$DOCS gate_load=$GATE_LOAD canary=${CANARY_THREADS}x${CANARY_S}s<${CANARY_MAX_STEAL}%" >> BENCH/preconditions.log
-: > "BENCH/raw_steady_cpus${LO}.jsonl"
-: > "BENCH/raw_steady_cpus${HI}.jsonl"
+echo "$(date -u +%FT%TZ) loadavg=$(cut -d' ' -f1-3 /proc/loadavg) steady-v3 pairs=$PAIRS lo=$LO hi=$HI docs=$DOCS gate_load=$GATE_LOAD canary=${CANARY_THREADS}x${CANARY_S}s<${CANARY_MAX_STEAL}%,>=${CANARY_MIN_MHASH}mhash bracket=open+close" >> BENCH/preconditions.log
 # compile once up front so per-invocation sbt runs don't interleave
 # compilation with measurement
 sbt -batch compile >/dev/null 2>&1
@@ -73,9 +81,25 @@ for i in $(seq 1 "$PAIRS"); do
       continue
     fi
     echo "== steady sample $i/$PAIRS cpus=$cpus $(date -u +%T) loadavg=$(cut -d' ' -f1 /proc/loadavg) ==" >&2
-    SPARK_GRAFT_CPUS=$cpus SPARK_GRAFT_BENCH_DOCS="$DOCS" \
-      sbt -batch "runMain graft.BenchKgw" 2>/dev/null \
-      | grep '"metric"' | sed 's/^\[info\] //' >> "BENCH/raw_steady_cpus${cpus}.jsonl"
+    line=$(SPARK_GRAFT_CPUS=$cpus SPARK_GRAFT_BENCH_DOCS="$DOCS" \
+      sbt -batch "runMain graft.Layers kg_write" 2>/dev/null \
+      | grep '"metric"' | sed 's/^\[info\] //' | tail -1)
+    # closing canary bracket (rule d): merge into the sample's own JSON;
+    # the canary exits nonzero on threshold failure but still prints its
+    # measurement, so capture output regardless
+    cj=$(python3 tools/host_canary.py "$CANARY_THREADS" "$CANARY_S" \
+      "$CANARY_MAX_STEAL" "$CANARY_MIN_MHASH") || true
+    python3 - "$line" "$cj" <<'PYEOF' >> "BENCH/raw_steady_cpus${cpus}.jsonl"
+import json, sys
+r = json.loads(sys.argv[1])
+try:
+    c = json.loads(sys.argv[2])
+    r["canary_after_mhash"] = c["mhash"]
+    r["canary_after_steal"] = c["steal_pct"]
+except Exception:
+    r["canary_after_mhash"] = None
+print(json.dumps(r))
+PYEOF
   done
 done
 python3 tools/scaling_steady.py "$LO" "$HI"
