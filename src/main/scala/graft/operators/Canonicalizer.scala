@@ -251,12 +251,10 @@ object Canonicalizer extends Serializable {
     out
   }
 
-  /** C4: rewrite an id column through the component map; ids without a
-    * component stay themselves. Broadcast when the map is small. */
-  def remap(df: DataFrame, idCol: String, components: DataFrame,
-      hintBroadcast: Boolean = true): DataFrame = {
-    val comp0 = components.withColumnRenamed("entity_id", idCol)
-    val comp = if (hintBroadcast) broadcast(comp0) else comp0
+  /** C4: rewrite an id column through the component map (broadcast); ids
+    * without a component stay themselves. */
+  def remap(df: DataFrame, idCol: String, components: DataFrame): DataFrame = {
+    val comp = broadcast(components.withColumnRenamed("entity_id", idCol))
     df.join(comp, Seq(idCol), "left")
       .withColumn(idCol, coalesce(col("canonical"), col(idCol)))
       .drop("canonical")

@@ -228,8 +228,9 @@ object Curation {
   def lineagePath(path: String): String = s"$path/_graft_curation_lineage.json"
 
   /** Materialize the curated corpus — the curation flagship's PRODUCT
-    * surface, mirroring the KG triple sink (same generic bucketed write:
-    * doc-id hash buckets, range repartition + in-file doc_id clustering,
+    * surface, mirroring the KG triple sink (same generic one-pass bucketed
+    * write: doc-id hash buckets rebalanced on the bucket, files sorted by
+    * (bucket, doc_id, text), per-bucket lineage read back from disk,
     * manifest checkpoint-resume, exactly-once per bucket). Next to the
     * manifest it lands `_graft_curation_lineage.json` recording how many
     * docs each curation gate dropped (lang / quality / exact / lexical /

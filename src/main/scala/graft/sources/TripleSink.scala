@@ -9,10 +9,10 @@ import org.apache.spark.sql.functions._
 import graft.model.Spec
 
 /** S5/S7: the materialized triple table — partitioned by subject-hash
-  * bucket, range-repartitioned and sorted by subject within files, with a
-  * JSON-lines manifest carrying per-bucket lineage (row count + content
-  * checksum) for checkpoint-resume (BASELINE.json:6,14; SURVEY.md §2.1,
-  * §7 M4).
+  * bucket, rebalanced on the bucket and sorted by (bucket, subj, pred, obj)
+  * within files, with a manifest carrying per-bucket lineage (row count +
+  * content checksum, read back from the committed files) for
+  * checkpoint-resume (BASELINE.json:6,14; SURVEY.md §2.1, §7 M4).
   *
   * Iceberg substitution note (SURVEY.md §0.3): no Iceberg jar ships in
   * /opt/spark/jars, so the Iceberg *layout semantics* are implemented on
@@ -48,14 +48,8 @@ object TripleSink {
     (p.getFileSystem(conf), p)
   }
 
-  def readManifest(path: String): Seq[BucketLineage] = {
-    val (f, p) = hfs(manifestPath(path))
-    if (!f.exists(p)) Seq.empty
-    else {
-      val in = f.open(p)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+  def readManifest(path: String): Seq[BucketLineage] =
+    readSidecar(manifestPath(path)).toSeq.flatMap { text =>
       // fixed writer format, see appendManifest. A malformed line (torn
       // write on a filesystem without atomic rename) is flagged and
       // skipped, not thrown: its bucket simply reads as incomplete and is
@@ -78,29 +72,15 @@ object TripleSink {
         parsed
       }
     }
-  }
 
-  /** Append semantics implemented as read + rewrite-to-temp + atomic
-    * rename: the manifest is bucket-count-sized, and FileSystem.append is
-    * unsupported on several real filesystems (notably the checksummed
-    * local FS and object stores). The rename (FileContext with OVERWRITE —
-    * atomic on HDFS and the local FS) means a crash mid-write can never
-    * destroy previously durable bucket records: the old manifest stays
-    * intact until the new one is fully written (advisor finding, round 4 —
-    * the previous truncate-then-write could tear it). */
-  private def appendManifest(path: String, rows: Seq[BucketLineage]): Unit = {
-    val existing = readManifest(path)
-    val (f, p) = hfs(manifestPath(path))
-    val body = (existing ++ rows)
+  /** Append semantics implemented as read + atomic rewrite
+    * ([[writeSidecar]]): the manifest is bucket-count-sized, and
+    * FileSystem.append is unsupported on several real filesystems (notably
+    * the checksummed local FS and object stores). */
+  private def appendManifest(path: String, rows: Seq[BucketLineage]): Unit =
+    writeSidecar(manifestPath(path), (readManifest(path) ++ rows)
       .map(r => s"${r.bucket},${r.rows},${r.checksum}")
-      .mkString("", "\n", "\n")
-    val tmp = new Path(p.getParent, s".${p.getName}.tmp")
-    val out = f.create(tmp, true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    FileContext.getFileContext(p.toUri, f.getConf)
-      .rename(tmp, p, Options.Rename.OVERWRITE)
-  }
+      .mkString("", "\n", "\n"))
 
   /** Adds the physical subject-hash bucket column (FIXTURES.md §5). */
   def withSubjectBucket(triples: DataFrame,
@@ -128,10 +108,12 @@ object TripleSink {
 
   /** The generic bucketed, manifest-tracked, resumable table write behind
     * [[writeTriples]] (and the curated-corpus sink,
-    * [[graft.operators.Curation.writeCurated]]): hash-bucket on `keyCol`,
-    * range-repartition + sort within files by `contentCols`, dynamic
-    * partition overwrite, per-bucket (rows, bit_xor checksum) lineage
-    * appended to the manifest. Resume protocol as documented on
+    * [[graft.operators.Curation.writeCurated]]), in one pass over `df`:
+    * hash-bucket on `keyCol`, rebalance on the bucket, sort within files
+    * by (bucket, `contentCols`), dynamic partition overwrite, then
+    * per-bucket (rows, bit_xor checksum) lineage read back from the
+    * committed files and appended to the manifest — so the manifest
+    * attests what is on disk. Resume protocol as documented on
     * [[writeTriples]]. */
   private[graft] def writeBucketed(spark: SparkSession, df: DataFrame,
       path: String, keyCol: String, bucketCol: String,
@@ -141,36 +123,37 @@ object TripleSink {
     val remaining = (0 until buckets).toSet -- done
     val target = onlyBuckets.map(_.intersect(remaining)).getOrElse(remaining)
     if (target.isEmpty) return Seq.empty
+    val inTarget = col(bucketCol).isin(target.toSeq: _*)
 
-    // Cache BEFORE repartitionByRange: the range partitioner runs a
-    // sampling pass over its child — uncached, that would recompute the
-    // entire upstream pipeline a second time.
     val withBucket = df.withColumn(bucketCol,
         pmod(xxhash64(col(keyCol)), lit(buckets.toLong)).cast("int"))
-      .filter(col(bucketCol).isin(target.toSeq: _*))
-      .cache()
+      .filter(inTarget)
 
-    // C6: spread the key space, cluster within files by key
+    // C6: hash-distribute on the bucket (AQE splits a head bucket at the
+    // advisory partition size and merges small ones); the sort leads with
+    // the bucket, so it already meets the write's required ordering on the
+    // partition column and the content order survives into every file
     withBucket
-      .repartitionByRange(col(bucketCol), col(keyCol))
-      .sortWithinPartitions(contentCols.map(col): _*)
+      .hint("rebalance", col(bucketCol))
+      .sortWithinPartitions((bucketCol +: contentCols).map(col): _*)
       .write
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(bucketCol)
       .parquet(path)
 
-    val lineage = withBucket
+    // explicit schema: an all-empty write commits no footers to infer from
+    val lineage = spark.read.schema(withBucket.schema).parquet(path)
+      .filter(inTarget)
       .groupBy(bucketCol)
       // bit_xor: order-independent content checksum that cannot overflow
       // under ANSI mode (a long sum would throw)
       .agg(count(lit(1)).as("rows"),
-        coalesce(expr(s"bit_xor(xxhash64(${contentCols.mkString(", ")}))"),
-          lit(0L)).as("checksum"))
+        expr(s"bit_xor(xxhash64(${contentCols.mkString(", ")}))")
+          .as("checksum"))
       .collect()
       .map(r => BucketLineage(r.getInt(0), r.getLong(1), r.getLong(2)))
       .toSeq
-    withBucket.unpersist()
     // buckets that had zero rows are still complete
     val empty = (target -- lineage.map(_.bucket).toSet).toSeq.sorted
       .map(b => BucketLineage(b, 0L, 0L))
@@ -179,8 +162,12 @@ object TripleSink {
     all
   }
 
-  /** Atomically (temp + rename) write a small sidecar text file next to a
-    * table — used for the curated sink's drop-lineage JSON. */
+  /** Atomically write a small sidecar text file next to a table (the
+    * manifest, the curated sink's drop-lineage JSON): write to a temp file,
+    * then rename over the target (FileContext with OVERWRITE — atomic on
+    * HDFS and the local FS), so a crash mid-write never destroys the
+    * previous version (advisor finding, round 4 — the earlier
+    * truncate-then-write could tear the manifest). */
   private[graft] def writeSidecar(path: String, body: String): Unit = {
     val (f, p) = hfs(path)
     val tmp = new Path(p.getParent, s".${p.getName}.tmp")

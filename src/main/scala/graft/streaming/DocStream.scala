@@ -81,12 +81,10 @@ object DocStream {
     * measured per batch by kgbench's `kg_stream` workload
     * (`DocStream.dedup_s` in its traced run). An
     * Iceberg deployment would express the same thing as MERGE INTO on the
-    * bucketed table; `broadcastDedup = false` restores the shuffle
-    * anti-join for deployments with unbounded micro-batches. */
+    * bucketed table. */
   def run(spark: SparkSession, inPath: String, outPath: String,
       checkpoint: String, maxFilesPerTrigger: Option[Int] = None,
       sameAsForBatch: Long => Seq[SameAsEdge] = _ => Spec.SameAs,
-      broadcastDedup: Boolean = true,
       // test-only failure injection: invoked at named points inside the
       // micro-batch so specs can kill the query mid-batch and assert the
       // restart path (checkpoint replay + idempotent state overwrite +
@@ -107,7 +105,7 @@ object DocStream {
         val triples = Pipeline.triplesWithComponents(s, batch, comps).cache()
         try {
           val novel = dedupAgainstPrior(s, triples, outPath,
-            priorBatchDirs(s, outPath, batchId), broadcastDedup)
+            priorBatchDirs(s, outPath, batchId))
           TripleSink.writeTriples(s, novel, s"$outPath/batch_id=$batchId")
         } finally triples.unpersist()
         ()
@@ -122,30 +120,24 @@ object DocStream {
     * plan). Package-visible so kgbench's `kg_stream` trace times the REAL
     * plan (`DocStream.dedup_s`) rather than a replica. */
   private[graft] def dedupAgainstPrior(s: SparkSession, triples: DataFrame,
-      outPath: String, prior: Seq[String],
-      broadcastDedup: Boolean = true): DataFrame =
+      outPath: String, prior: Seq[String]): DataFrame =
     if (prior.isEmpty) triples
     else {
       // basePath: the batch_id=… dirs are siblings under one partitioned
       // table root, not independent tables — partition discovery exposes
       // batch_id AND subj_bucket as columns
       val priorAll = s.read.option("basePath", outPath).parquet(prior: _*)
-      if (!broadcastDedup)
-        triples.join(priorAll.select("subj", "pred", "obj"),
-          Seq("subj", "pred", "obj"), "left_anti")
-      else {
-        // bounded collect: ≤ DefaultSubjectBuckets ints
-        val batchBuckets = triples
-          .select(pmod(xxhash64(col("subj")),
-            lit(Spec.DefaultSubjectBuckets.toLong)).cast("int").as("b"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        val dups = priorAll
-          .filter(col("subj_bucket").isin(batchBuckets: _*))
-          .select("subj", "pred", "obj")
-          .join(broadcast(triples.select("subj", "pred", "obj")),
-            Seq("subj", "pred", "obj"), "left_semi")
-        triples.join(broadcast(dups), Seq("subj", "pred", "obj"), "left_anti")
-      }
+      // bounded collect: ≤ DefaultSubjectBuckets ints
+      val batchBuckets = triples
+        .select(pmod(xxhash64(col("subj")),
+          lit(Spec.DefaultSubjectBuckets.toLong)).cast("int").as("b"))
+        .distinct().collect().map(_.getInt(0)).toSeq
+      val dups = priorAll
+        .filter(col("subj_bucket").isin(batchBuckets: _*))
+        .select("subj", "pred", "obj")
+        .join(broadcast(triples.select("subj", "pred", "obj")),
+          Seq("subj", "pred", "obj"), "left_semi")
+      triples.join(broadcast(dups), Seq("subj", "pred", "obj"), "left_anti")
     }
 
   private def statePath(outPath: String): String = s"$outPath/_cc_state"

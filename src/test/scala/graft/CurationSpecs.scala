@@ -1216,30 +1216,6 @@ class StreamingSpec extends SparkTestBase {
     assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty)
   }
 
-  test("shuffle-fallback dedup (broadcastDedup=false) equals the broadcast path") {
-    // the unbounded-micro-batch escape hatch must keep the exact-set
-    // contract: same corpus, same batching, shuffle anti-join instead of
-    // the broadcast-flipped dedup
-    import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream5").toString
-    val docs = graft.sources.InterleavedDocs.synthesize(spark, 120L, seed = 21L)
-    docs.filter(col("doc_id") < "d00000060").write.parquet(s"$tmp/in")
-    docs.filter(col("doc_id") >= "d00000060").write
-      .mode("append").parquet(s"$tmp/in")
-
-    val q = graft.streaming.DocStream.run(spark, s"$tmp/in", s"$tmp/out",
-      s"$tmp/ckpt", maxFilesPerTrigger = Some(1), broadcastDedup = false)
-    q.awaitTermination(120000)
-
-    val streamed = spark.read.parquet(s"$tmp/out")
-      .select("subj", "pred", "obj", "obj_type")
-    assert(streamed.count() ==
-      streamed.dropDuplicates("subj", "pred", "obj").count(),
-      "cross-batch duplicate triples found")
-    val batch = Pipeline.triples(spark, docs)
-    assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty)
-  }
-
   test("kill after state write, before triple write: restart yields the exact batch set") {
     // round-3 judge item 7: the stream path's retry-safety (idempotent
     // _cc_state overwrite + manifest-gated bucket writes) was argued in
